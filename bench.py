@@ -332,6 +332,11 @@ def main():
                 "pipeline_input_rows": SEQ_ROWS,
                 "pipeline_sec": round(pipe_sec, 3),
                 "pipeline_sec_basis": pipe_basis,
+                # the unfiltered clean median: its distance from
+                # pipeline_sec shows what the 15% consistency gate removed
+                "pipeline_median_clean_sec": (
+                    round(statistics.median(clean), 3) if clean else None
+                ),
                 "pipeline_trials": trial_meta,
                 "pipeline_trials_clean": len(clean),
                 "pipeline_trials_consistent": len(consistent),

@@ -188,6 +188,41 @@ class TestLoadCompatAndActiveWorkspace:
         (ws,) = load_workspaces(p, invalid_regex="match_nothing")
         assert [s.source for s in ws.sources] == ["x"]
 
+    def test_load_workspaces_warns_per_dropped_duplicate(self, tmp_path, caplog):
+        import json
+        import logging
+
+        from txtlogparser_spark.config import FORMAT_VERSION, load_workspaces
+
+        doc = {
+            "formatVersion": FORMAT_VERSION,
+            "workspaces": [
+                {
+                    "id": 7,
+                    "name": "w",
+                    "filters": [],
+                    "searches": [],
+                    "sources": [
+                        {"source": "x", "source_rank": 0},
+                        {"source": "y", "source_rank": 1},
+                        {"source": "x", "source_rank": 2},
+                    ],
+                }
+            ],
+        }
+        p = str(tmp_path / "store.json")
+        with open(p, "w") as fh:
+            json.dump(doc, fh)
+        with caplog.at_level(logging.WARNING, logger="txtlogparser_spark.config"):
+            (ws,) = load_workspaces(p, invalid_regex="match_nothing")
+        assert [(s.source, s.source_rank) for s in ws.sources] == [
+            ("x", 0), ("y", 1),
+        ]
+        dropped = [r.getMessage() for r in caplog.records]
+        assert len(dropped) == 1
+        assert "workspace 7" in dropped[0] and "'x'" in dropped[0]
+        assert "source_rank 2" in dropped[0]
+
     def test_save_workspaces_roundtrips_active_id(self, tmp_path):
         import json
 

@@ -2,7 +2,7 @@
 
 Launch (multi-executor layout; local[N] in this sandbox):
 
-    cd /root/repo && zip -qr /tmp/tlp.zip txtlogparser_spark
+    zip -qr /tmp/tlp.zip txtlogparser_spark      # from the repository root
     spark-submit --master 'local[8]' --py-files /tmp/tlp.zip \
         tools/run_job.py --data .bench_data/seq_2000000 --out /tmp/run_out
 

@@ -12,9 +12,12 @@ divergence, SURVEY.md §2.3 #6/#7).
 from __future__ import annotations
 
 import json
+import logging
 import re
 from dataclasses import dataclass, field, asdict
 from typing import Iterable
+
+_log = logging.getLogger(__name__)
 
 FORMAT_VERSION = 1
 
@@ -241,6 +244,14 @@ class WorkspaceConfig:
                 if s.source not in seen_names:
                     seen_names.add(s.source)
                     kept.append(s)
+                else:
+                    # the reference would read this path a second time
+                    # and show its lines twice; keep-first reads it once
+                    _log.warning(
+                        "workspace %s: dropping duplicate source entry "
+                        "%r (source_rank %s); the first entry is kept",
+                        self.id, s.source, s.source_rank,
+                    )
             self.sources[:] = kept
         ranks = [s.source_rank for s in self.sources]
         if len(ranks) != len(set(ranks)):
@@ -327,7 +338,9 @@ def load_workspaces(
     """Load a workspaces.json (WorkspaceManager.cpp:78-143): version-check the
     root `formatVersion`, refuse incompatible files. invalid_regex=
     'match_nothing' loads reference-era fixtures byte-for-byte even when
-    they contain invalid regex patterns (see MatcherSpec.validate)."""
+    they contain invalid regex patterns (see MatcherSpec.validate); the same
+    compat load keeps the first of duplicated source entries and logs a
+    warning naming each one it drops (WorkspaceConfig.validate)."""
     with open(path) as fh:
         doc = json.load(fh)
     version = doc.get("formatVersion")

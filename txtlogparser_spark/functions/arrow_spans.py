@@ -11,6 +11,9 @@ variant works directly on Arrow RecordBatches:
 - the per-row Python work is a loop over CLAIM-BEARING words only;
 - span outputs are built as flat primitive buffers + list offsets and
   wrapped with pa.ListArray.from_arrays — no pandas anywhere;
+- the optional `text` column is one whole-batch call of the shared Arrow
+  detokenize kernel (functions/detokenize.py::detokenize_arrow), without
+  the line scrub: span offsets are computed on the unscrubbed words;
 - passthrough columns are echoed by reference (zero copy).
 
 Semantics are identical to token_spans (same word tables, same assembly
@@ -25,7 +28,7 @@ import numpy as np
 import pyarrow as pa
 
 from txtlogparser_spark.config import FilterSpec, SearchSpec
-from txtlogparser_spark.functions.detokenize import UNK
+from txtlogparser_spark.functions.detokenize import detokenize_arrow, vocab_table
 from txtlogparser_spark.functions.token_spans import build_word_tables
 
 
@@ -41,7 +44,7 @@ def make_arrow_span_mapper(
     """Returns (fn, extra_fields) for DataFrame.mapInArrow: fn echoes the
     input schema and appends flat span columns (f_start/f_end/f_id/f_row
     [+ s_*] [+ text]), exactly the fields assemble_spans() re-zips."""
-    table = np.asarray(list(vocab) + [UNK], dtype=object)
+    text_table = vocab_table(vocab) if include_text else None
     nv = len(vocab)
     wlen, has_claim, ffrags, sfrags, _ = build_word_tables(
         vocab,
@@ -142,7 +145,6 @@ def make_arrow_span_mapper(
                 s_s: List[int] = []; s_e: List[int] = []
                 s_i: List[int] = []; s_r: List[int] = []
                 s_off = [0]
-            texts: List[str] = [] if include_text else None
 
             for r in range(nrows):
                 a, b = offs[r], offs[r + 1]
@@ -157,13 +159,9 @@ def make_arrow_span_mapper(
                             s_s.append(s0); s_e.append(e0)
                             s_i.append(i0); s_r.append(r0)
                         s_off.append(len(s_s))
-                    if include_text:
-                        texts.append("")
                     continue
                 ids = vals[a:b]
                 n = int(gcum[b] - gcum[a]) - 1  # sum(len+1) - trailing sep
-                if include_text:
-                    texts.append(" ".join(table[ids]))
                 cmask = claim_flat[a:b]
                 if not cmask.any():
                     f_s.append(0); f_e.append(n); f_i.append(-1); f_r.append(-1)
@@ -196,7 +194,7 @@ def make_arrow_span_mapper(
                          list_arr(s_off, s_i), list_arr(s_off, s_r)]
                 names += ["s_start", "s_end", "s_id", "s_row"]
             if include_text:
-                cols.append(pa.array(texts, type=pa.string()))
+                cols.append(detokenize_arrow(la, text_table))
                 names.append("text")
             yield pa.RecordBatch.from_arrays(cols, names=names)
 

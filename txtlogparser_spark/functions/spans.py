@@ -200,6 +200,14 @@ def extract_line_spans(
 
     Returns (filter_spans, search_spans, combined_spans) as lists of
     6-int tuples. Pure function — unit-testable off-cluster.
+
+    Deliberate divergence: an EMPTY unclaimed segment is dropped after the
+    first matcher that finds nothing in it, for regex and non-regex
+    matchers alike. The reference drops it only in its non-regex path
+    (FilterData.cpp:154-159); its regex no-match branch
+    (FilterData.cpp:184-191) re-pushes the segment even when empty, so a
+    non-matching regex followed by a zero-width-capable regex claims an
+    empty line there and claims nothing here (README "Semantics parity").
     """
     n = len(text)
     if folded is None:

@@ -21,7 +21,8 @@ Two alternatives were measured and rejected:
   (array_distinct + per-id filter) is shuffle-optimal but ~5x slower in
   practice: nested HOFs evaluate interpreted, O(k²) per row.
 The tagged-explode form is O(k) expression work per row AND
-shuffle-optimal.
+shuffle-optimal. Every metrics frame comes back in ONE partition (see
+`_metrics` for why).
 """
 
 from __future__ import annotations
@@ -35,17 +36,9 @@ _OCC = 0
 _LINE = 1
 
 
-def _tagged_pairs(spans_col: str, id_field: str, with_sentinel: bool) -> Column:
+def _tagged_from_claimed(claimed: Column, with_sentinel: bool) -> Column:
     """array<struct<id,kind>>: one OCC entry per claimed span + one LINE
     entry per distinct claiming matcher [+ one sentinel LINE/OCC pair]."""
-    spans = F.col(spans_col)
-    claimed = F.transform(
-        F.filter(spans, lambda s: s[id_field] != -1), lambda s: s[id_field]
-    )
-    return _tagged_from_claimed(claimed, with_sentinel)
-
-
-def _tagged_from_claimed(claimed: Column, with_sentinel: bool) -> Column:
     occ = F.transform(
         claimed, lambda x: F.struct(x.alias("id"), F.lit(_OCC).alias("kind"))
     )
@@ -70,35 +63,70 @@ def _tagged_from_claimed(claimed: Column, with_sentinel: bool) -> Column:
     return F.concat(*parts)
 
 
-def _metrics(
-    df: DataFrame, spans_col: str, id_field: str, out_id: str, sentinel: bool
-) -> DataFrame:
-    e = df.select(F.explode(_tagged_pairs(spans_col, id_field, sentinel)).alias("t"))
-    return e.groupBy(F.col("t.id").alias(out_id)).agg(
-        F.sum(F.when(F.col("t.kind") == _OCC, 1).otherwise(0)).alias(
-            "occurrence_count"
-        ),
-        F.sum(F.when(F.col("t.kind") == _LINE, 1).otherwise(0)).alias(
-            "line_count"
-        ),
+def _claimed_span_ids(spans_col: str, id_field: str) -> Column:
+    """array<int>: the matcher id of every claimed span, in line order."""
+    return F.transform(
+        F.filter(F.col(spans_col), lambda s: s[id_field] != -1),
+        lambda s: s[id_field],
+    )
+
+
+def _claimed_flat_ids(ids_col: str) -> Column:
+    """The same array over a flat id column (-1 = unclaimed)."""
+    return F.filter(F.col(ids_col), lambda x: x != -1)
+
+
+def _metrics(df: DataFrame, claimed: Column, out_id: str, sentinel: bool) -> DataFrame:
+    """(out_id, occurrence_count, line_count) from a claimed-id array column.
+
+    The result is coalesced to ONE partition. It holds at most
+    (#matchers + 1) rows, but the final aggregate otherwise keeps
+    spark.sql.shuffle.partitions partitions (200 by default). Spark 4.1
+    sets spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false,
+    so AQE does not coalesce a plan that is persisted: run_job's
+    `one_pass_metrics(sink).persist()` then built and read 200 cached
+    partitions in two 200-task jobs per run. The coalesce sits above the
+    final aggregate and does not cross the hash exchange, so the
+    map-side partial aggregation stays fully parallel and the shuffle
+    still carries only (id, partial sums). repartition(1) would add a
+    second exchange (measured slower); setting the conf from here would
+    change every cached plan of the caller's session."""
+    e = df.select(F.explode(_tagged_from_claimed(claimed, sentinel)).alias("t"))
+    return (
+        e.groupBy(F.col("t.id").alias(out_id))
+        .agg(
+            F.sum(F.when(F.col("t.kind") == _OCC, 1).otherwise(0)).alias(
+                "occurrence_count"
+            ),
+            F.sum(F.when(F.col("t.kind") == _LINE, 1).otherwise(0)).alias(
+                "line_count"
+            ),
+        )
+        .coalesce(1)
     )
 
 
 def filter_metrics(routed: DataFrame, spans_col: str = "filter_spans") -> DataFrame:
     """occurrence_count = claimed spans; line_count = matched lines.
     `routed` must be the surviving set with `doc_id` unique per line."""
-    return _metrics(routed, spans_col, "filter_id", "filter_id", False)
+    return _metrics(
+        routed, _claimed_span_ids(spans_col, "filter_id"), "filter_id", False
+    )
 
 
 def search_metrics(annotated: DataFrame, spans_col: str = "search_spans") -> DataFrame:
-    return _metrics(annotated, spans_col, "search_id", "search_id", False)
+    return _metrics(
+        annotated, _claimed_span_ids(spans_col, "search_id"), "search_id", False
+    )
 
 
 def one_pass_metrics(routed: DataFrame, spans_col: str = "filter_spans") -> DataFrame:
     """filter_metrics + total routed-row count in ONE job: every row
     additionally emits sentinel pairs, so the result row with
     filter_id == ALL_ROWS_SENTINEL carries rows_routed in both counts."""
-    return _metrics(routed, spans_col, "filter_id", "filter_id", True)
+    return _metrics(
+        routed, _claimed_span_ids(spans_col, "filter_id"), "filter_id", True
+    )
 
 
 # ---- flat-sink variants: operate on the unassembled f_id/s_id arrays
@@ -107,26 +135,13 @@ def one_pass_metrics(routed: DataFrame, spans_col: str = "filter_spans") -> Data
 # of decoding the full list<struct> span column.
 
 
-def _metrics_flat(df: DataFrame, ids_col: str, out_id: str, sentinel: bool) -> DataFrame:
-    claimed = F.filter(F.col(ids_col), lambda x: x != -1)
-    e = df.select(F.explode(_tagged_from_claimed(claimed, sentinel)).alias("t"))
-    return e.groupBy(F.col("t.id").alias(out_id)).agg(
-        F.sum(F.when(F.col("t.kind") == _OCC, 1).otherwise(0)).alias(
-            "occurrence_count"
-        ),
-        F.sum(F.when(F.col("t.kind") == _LINE, 1).otherwise(0)).alias(
-            "line_count"
-        ),
-    )
-
-
 def filter_metrics_flat(routed: DataFrame, ids_col: str = "f_id") -> DataFrame:
-    return _metrics_flat(routed, ids_col, "filter_id", False)
+    return _metrics(routed, _claimed_flat_ids(ids_col), "filter_id", False)
 
 
 def search_metrics_flat(annotated: DataFrame, ids_col: str = "s_id") -> DataFrame:
-    return _metrics_flat(annotated, ids_col, "search_id", False)
+    return _metrics(annotated, _claimed_flat_ids(ids_col), "search_id", False)
 
 
 def one_pass_metrics_flat(routed: DataFrame, ids_col: str = "f_id") -> DataFrame:
-    return _metrics_flat(routed, ids_col, "filter_id", True)
+    return _metrics(routed, _claimed_flat_ids(ids_col), "filter_id", True)

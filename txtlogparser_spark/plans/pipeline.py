@@ -33,7 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from txtlogparser_spark.config import WorkspaceConfig
-from txtlogparser_spark.functions.detokenize import make_detokenizer
+from txtlogparser_spark.functions.detokenize import detokenize_frame
 from txtlogparser_spark.functions.spans import (
     assemble_spans,
     attach_spans,
@@ -76,7 +76,6 @@ class LogPipeline:
         # salted repartition width for hot-source skew (SURVEY.md §4 #2);
         # 0 = rely on AQE skew handling only
         self.salt_buckets = salt_buckets
-        self._detok = make_detokenizer(self.vocab)
 
     # ---- sources ----
     def load_sequences(self, path: str) -> DataFrame:
@@ -105,10 +104,11 @@ class LogPipeline:
         # long, not int: at the designed 10^12-sequence scale a source
         # can exceed 2^31 lines, and the non-ANSI string->int cast would
         # silently NULL line_no past that (breaking the total order)
-        return df.withColumn(
+        df = df.withColumn(
             "line_no",
             F.substring_index("doc_id", "-", -1).cast("long"),
-        ).withColumn("text", self._detok(F.col("tokens")))
+        )
+        return detokenize_frame(df, self.vocab)
 
     def enriched(
         self,
@@ -383,8 +383,12 @@ class LogPipeline:
     def display_text(self, df: DataFrame) -> DataFrame:
         """Reconstruct `text` from tokens for a (page-sized) slice — the
         render-on-demand analog of OutputData.cpp:504-524 when the sink
-        was written with with_text=False."""
-        return df.withColumn("text", self._detok(F.col("tokens")))
+        was written with with_text=False. An existing `text` column is
+        replaced; the rendered one is appended last. Rendered by a
+        mapInArrow step, not the scalar UDF, so that an
+        `orderBy(...).limit(k)` page keeps its top-K plan
+        (functions/detokenize.py::detokenize_frame)."""
+        return detokenize_frame(df, self.vocab)
 
     def write_sinks(
         self, routed: DataFrame, out_dir: str, compact: bool = False
